@@ -31,6 +31,52 @@ object Bench {
     System.gc()
   }
 
+  /** The timed passes of one board row, in seconds; a pass that throws
+    * is logged and left out.
+    *
+    * Steady-state protocol: each query runs twice with a full engine
+    * reset after every execution; the reported time is the min of the
+    * two passes. One pass alone conflates a query's plan cost with
+    * whatever JIT/allocator pressure the previous 100+ queries left
+    * behind; min-of-two after reset measures the plan.
+    */
+  private[graft] def timePasses(name: String, reset: => Unit)(run: => Unit): Seq[Double] = {
+    def pass(): Option[Double] = {
+      val t0 = System.nanoTime()
+      val ok = try { run; true } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+      }
+      val dt = (System.nanoTime() - t0) / 1e9
+      reset
+      if (ok) Some(dt) else None
+    }
+    val first = (1 to 2).flatMap(_ => pass())
+    // short rows carry the protocol's whole noise envelope (13
+    // same-commit sub-second queries once differed >1.5x), and the
+    // 2-pass rule under-warms string/hash-heavy rows — they need 4-5
+    // executions to reach C2 steady state (PLANS round-15) — so rows
+    // under 1.5 s get TWO extra passes
+    if (first.nonEmpty && first.min < 1.5) first ++ (1 to 2).flatMap(_ => pass())
+    else first
+  }
+
+  /** One board's bookings: the min time of every row with at least one
+    * successful pass, and the names of the rows that failed every pass.
+    * A failed row has no time: it is listed in `errors` only, never
+    * booked as 0.0 s in `queries` or `total`, so a crash cannot read as
+    * a speed-up in a row-by-row comparison.
+    */
+  private[graft] final case class Board(queries: Seq[(String, Double)],
+                                        errors: Seq[String]) {
+    def total: Double = queries.map(_._2).sum
+  }
+
+  private[graft] def book(passes: Seq[(String, Seq[Double])]): Board =
+    Board(passes.collect { case (q, ts) if ts.nonEmpty => q -> ts.min },
+      passes.collect { case (q, ts) if ts.isEmpty => q })
+
   /** 1-minute load average via the JMX OS bean (portable; /proc-free).
     * None when the platform reports a negative sentinel.
     */
@@ -86,35 +132,12 @@ object Bench {
           if (ts.nonEmpty) Some(q -> ts.min) else None
         }
       }
-    // Steady-state protocol: each query runs twice with a full engine
-    // reset after every execution; the reported time is the min of the
-    // two passes. One pass alone conflates a query's plan cost with
-    // whatever JIT/allocator pressure the previous 100+ queries left
-    // behind; min-of-two after reset measures the plan.
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def pass(): Option[Double] = {
-        val t0 = System.nanoTime()
-        val ok = try { graft.queries.Registry.consume(name, fn(spark, sfDir)); true } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        resetEngineState(spark)
-        if (ok) Some(dt) else None
+      name -> timePasses(name, resetEngineState(spark)) {
+        graft.queries.Registry.consume(name, fn(spark, sfDir))
       }
-      val first = (1 to 2).flatMap(_ => pass())
-      // short rows carry the protocol's whole noise envelope (r8: 13
-      // same-commit queries differed >1.5x, every one sub-second). The
-      // r15 drift investigation (PLANS round-15) proved the 2-pass rule
-      // UNDER-WARMS string/hash-heavy rows — they need 4-5 executions
-      // to reach C2 steady state — so rows under 1.5 s get TWO extra
-      // passes (threshold raised 0.5 -> 1.5 per r15 verdict #3; r16
-      // re-bases the cross-round board comparison anyway)
-      val times = if (first.nonEmpty && first.min < 1.5)
-        first ++ (1 to 2).flatMap(_ => pass()) else first
-      (name, if (times.nonEmpty) times.min else 0.0, times.nonEmpty)
     }
+    val board = book(results)
     // Output contract, rebuilt for round 12 (verdict nit #1: the single
     // ~2 KB timing line outgrew the harness's 2000-byte output tail —
     // front-truncation shipped BENCH_r11.json with `parsed: null`).
@@ -156,7 +179,7 @@ object Bench {
     def key(k: String): String = if (ambiguous(short(k))) k else short(k)
     // full names here: failures should be rare, and an ambiguous short
     // name in the error list would hide WHICH variant failed
-    val errNames = results.collect { case (k, _, false) => "\"" + k + "\"" }
+    val errNames = board.errors.map(k => "\"" + k + "\"")
     val errs = errNames.mkString("[", ",", "]")
     // the stdout line gets a CAPPED error list (advice round-12: a long
     // failure list would drive the query budget negative and the
@@ -205,8 +228,8 @@ object Bench {
       s""""load1_start":${loadAtStart.map(f2).getOrElse("null")},""" +
       s""""load1_end":${loadAtEnd.map(f2).getOrElse("null")},""" +
       s""""ref_dir":${jsonStr(refDir)},"ref_rows":$refJson"""
-    val total = results.map(_._2).sum
-    val fullQs = results.map { case (k, v, _) => "\"" + k + "\":" + f3(v) }
+    val total = board.total
+    val fullQs = board.queries.map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","unit":"sec","n_queries":${results.size},$protocol,$loadJson,""" +
@@ -215,8 +238,8 @@ object Bench {
     try java.nio.file.Files.writeString(fullPath, fullJson + "\n")
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}") }
-    val slowestFirst = results.sortBy(-_._2)
-      .map { case (k, v, _) => "\"" + key(k) + "\":" + f2(v) }
+    val slowestFirst = board.queries.sortBy(-_._2)
+      .map { case (k, v) => "\"" + key(k) + "\":" + f2(v) }
     // ONE skeleton builder serves both the budget measurement and the
     // final print (review round-12: two hand-maintained copies of the
     // JSON skeleton would let a future field edit silently re-break the
@@ -228,13 +251,13 @@ object Bench {
         s""""queries_file":"BENCH_FULL.json","errors":$errsShort,""" +
         s""""errors_omitted":$errsOmitted,""" +
         s""""sf":${jsonStr(sfDir)},"value":${f3(total)}}"""
-    val budget = 1400 - shortLine("{}", results.size).length
+    val budget = 1400 - shortLine("{}", board.queries.size).length
     val kept = new scala.collection.mutable.ArrayBuffer[String]
     var used = 0
     slowestFirst.foreach { entry =>
       if (used + entry.length + 1 <= budget) { kept += entry; used += entry.length + 1 }
     }
-    println(shortLine(kept.mkString("{", ",", "}"), results.size - kept.size))
+    println(shortLine(kept.mkString("{", ",", "}"), board.queries.size - kept.size))
     spark.stop()
   }
 }

@@ -16,6 +16,8 @@ import graft.expressions._
   *   char_ngrams(text, n)
   *   fingerprint(tokens)
   *   jaccard_sim(a, b)
+  *   intersect_count(a, b)
+  *   winnow_fps(text, k, w)
   *   nearest_centroids(vec, array(array(...), ...), k)
   *   sparse_dot(indices, values, array(w0, w1, ...))
   *   hashed_bow(tokens, dim)
@@ -76,36 +78,44 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
   }
 
+  /** The native SQL functions, one row each: SQL name, expression class
+    * (for `ExpressionInfo`) and builder. Both registration paths —
+    * [[registerOn]] and [[apply]] — read this one table.
+    */
+  private val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("minhash_sig", classOf[MinHashSigExpr],
+      args => MinHashSigExpr(args(0), lit(args(1)))),
+    ("lsh_band_keys", classOf[BandKeysExpr],
+      args => BandKeysExpr(args(0), lit(args(1)), lit(args(2)))),
+    ("cosine_sim", classOf[CosineSimExpr],
+      args => CosineSimExpr(args(0), args(1))),
+    ("lsh_sign_bits", classOf[LshSignBitsExpr],
+      args => LshSignBitsExpr(args(0), lit(args(1)))),
+    ("char_ngrams", classOf[CharNgramsExpr],
+      args => CharNgramsExpr(args(0), lit(args(1)))),
+    ("fingerprint", classOf[FingerprintExpr],
+      args => FingerprintExpr(args(0))),
+    ("jaccard_sim", classOf[JaccardExpr],
+      args => JaccardExpr(args(0), args(1))),
+    ("intersect_count", classOf[IntersectCountExpr],
+      args => IntersectCountExpr(args(0), args(1))),
+    ("winnow_fps", classOf[WinnowFpsExpr],
+      args => WinnowFpsExpr(args(0), lit(args(1)), lit(args(2)))),
+    ("nearest_centroids", classOf[NearestCentroidsExpr],
+      args => NearestCentroidsExpr(args(0), centroidMatrix(args(1)), lit(args(2)))),
+    ("sparse_dot", classOf[SparseDotExpr],
+      args => SparseDotExpr(args(0), args(1), weightVector(args(2)))),
+    ("hashed_bow", classOf[HashedBowExpr],
+      args => HashedBowExpr(args(0), lit(args(1)))))
+
   /** Post-hoc registration on an already-built session (the builder
     * path, `withExtensions`, only applies at session construction).
     */
   def registerOn(spark: org.apache.spark.sql.SparkSession): Unit = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val g = org.apache.spark.sql.graftglue.Glue
-    g.registerFunction(classic, "minhash_sig",
-      args => MinHashSigExpr(args(0), lit(args(1))))
-    g.registerFunction(classic, "lsh_band_keys",
-      args => BandKeysExpr(args(0), lit(args(1)), lit(args(2))))
-    g.registerFunction(classic, "cosine_sim",
-      args => CosineSimExpr(args(0), args(1)))
-    g.registerFunction(classic, "lsh_sign_bits",
-      args => LshSignBitsExpr(args(0), lit(args(1))))
-    g.registerFunction(classic, "char_ngrams",
-      args => CharNgramsExpr(args(0), lit(args(1))))
-    g.registerFunction(classic, "fingerprint",
-      args => FingerprintExpr(args(0)))
-    g.registerFunction(classic, "jaccard_sim",
-      args => JaccardExpr(args(0), args(1)))
-    g.registerFunction(classic, "intersect_count",
-      args => IntersectCountExpr(args(0), args(1)))
-    g.registerFunction(classic, "winnow_fps",
-      args => WinnowFpsExpr(args(0), lit(args(1)), lit(args(2))))
-    g.registerFunction(classic, "nearest_centroids",
-      args => NearestCentroidsExpr(args(0), centroidMatrix(args(1)), lit(args(2))))
-    g.registerFunction(classic, "sparse_dot",
-      args => SparseDotExpr(args(0), args(1), weightVector(args(2))))
-    g.registerFunction(classic, "hashed_bow",
-      args => HashedBowExpr(args(0), lit(args(1))))
+    functions.foreach { case (name, _, build) =>
+      org.apache.spark.sql.graftglue.Glue.registerFunction(classic, name, build)
+    }
     // optimizer rules + planner strategies: post-hoc sessions get them
     // via the experimental seam (idempotent — skip if already there)
     if (!spark.experimental.extraOptimizations.exists(
@@ -126,54 +136,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRule)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
-      (args: Seq[Expression]) => MinHashSigExpr(args(0), lit(args(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("lsh_band_keys"),
-      new ExpressionInfo(classOf[BandKeysExpr].getName, "lsh_band_keys"),
-      (args: Seq[Expression]) => BandKeysExpr(args(0), lit(args(1)), lit(args(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimExpr].getName, "cosine_sim"),
-      (args: Seq[Expression]) => CosineSimExpr(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("lsh_sign_bits"),
-      new ExpressionInfo(classOf[LshSignBitsExpr].getName, "lsh_sign_bits"),
-      (args: Seq[Expression]) => LshSignBitsExpr(args(0), lit(args(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("char_ngrams"),
-      new ExpressionInfo(classOf[CharNgramsExpr].getName, "char_ngrams"),
-      (args: Seq[Expression]) => CharNgramsExpr(args(0), lit(args(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("fingerprint"),
-      new ExpressionInfo(classOf[FingerprintExpr].getName, "fingerprint"),
-      (args: Seq[Expression]) => FingerprintExpr(args(0))))
-    ext.injectFunction((
-      new FunctionIdentifier("jaccard_sim"),
-      new ExpressionInfo(classOf[JaccardExpr].getName, "jaccard_sim"),
-      (args: Seq[Expression]) => JaccardExpr(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("intersect_count"),
-      new ExpressionInfo(classOf[IntersectCountExpr].getName, "intersect_count"),
-      (args: Seq[Expression]) => IntersectCountExpr(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFpsExpr].getName, "winnow_fps"),
-      (args: Seq[Expression]) => WinnowFpsExpr(args(0), lit(args(1)), lit(args(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("nearest_centroids"),
-      new ExpressionInfo(classOf[NearestCentroidsExpr].getName, "nearest_centroids"),
-      (args: Seq[Expression]) =>
-        NearestCentroidsExpr(args(0), centroidMatrix(args(1)), lit(args(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("sparse_dot"),
-      new ExpressionInfo(classOf[SparseDotExpr].getName, "sparse_dot"),
-      (args: Seq[Expression]) => SparseDotExpr(args(0), args(1), weightVector(args(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("hashed_bow"),
-      new ExpressionInfo(classOf[HashedBowExpr].getName, "hashed_bow"),
-      (args: Seq[Expression]) => HashedBowExpr(args(0), lit(args(1)))))
+    functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

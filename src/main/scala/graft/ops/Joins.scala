@@ -37,6 +37,8 @@ object Joins {
     * Implemented as a self-equi-join on (keys, ts) with the right side
     * shifted forward — both sides shuffle on identical keys, so at scale
     * this is one co-partitioned sort-merge join, not an N+1 lookup.
+    * Only q08_lag_join still uses it; the pull pipeline's history fill
+    * is [[Windows.periodicLag]], which needs no join or extra shuffle.
     */
   def lagJoin(df: DataFrame, keys: Seq[String], tsCol: String, lagSec: Long,
               valueCols: Seq[String], suffix: String): DataFrame = {

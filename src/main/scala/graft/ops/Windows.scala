@@ -40,6 +40,36 @@ object Windows {
     df.withColumn(out, filled)
   }
 
+  /** J9 as one window: for each lag `l` in `lags`, attach every
+    * `valueCols` column's value from the row exactly `l × periodSec`
+    * seconds earlier on the same keys, or NULL when there is no such row
+    * (day−7/day−14 history fill, R/_pull_data.R:564-575), as column
+    * `<valueCol>_lag<l>`.
+    *
+    * Rows partition by (keys, epoch mod period) — the same slot of the
+    * period — and order by epoch microseconds, so each lag is a
+    * `rangeBetween(-l·period, -l·period)` frame holding one row or none.
+    * When (keys, tsCol) is unique this equals one [[Joins.lagJoin]] per
+    * lag, without the self-joins: the window clusters on a superset of
+    * `keys`, so input already partitioned on them adds no shuffle. NULL
+    * keys never match, as in the join.
+    */
+  def periodicLag(df: DataFrame, keys: Seq[String], tsCol: String,
+                  periodSec: Long, lags: Seq[Int],
+                  valueCols: Seq[String]): DataFrame = {
+    val period = periodSec * 1000000L
+    val micros = unix_micros(col(tsCol))
+    val slot = Window.partitionBy(keys.map(col) :+ pmod(micros, lit(period)): _*)
+      .orderBy(micros)
+    val keysPresent = keys.map(col(_).isNotNull).reduce(_ && _)
+    val lagged = for (l <- lags; c <- valueCols) yield {
+      val off = -l * period
+      when(keysPresent, first(col(c)).over(slot.rangeBetween(off, off)))
+        .as(s"${c}_lag$l")
+    }
+    df.select(col("*") +: lagged: _*)
+  }
+
   /** Linear gap interpolation (the remaining member of the reference's
     * imputation family): interior NULL runs interpolate linearly between
     * the nearest non-NULL neighbors by ROW POSITION within the ordered

@@ -3,7 +3,6 @@ package graft.traffic
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Warehouse
-import graft.ops.{Joins, TimeOps}
 
 /** §2.11/§3.1 orchestration — the nightly incremental driver
   * (reference /root/reference/R/4) Update-SensorData-Nightly.R:7-18 and
@@ -40,18 +39,22 @@ object Nightly {
   }
 
   /** One nightly run: read the raw 30-sec source for the planned dates
-    * (partition-pruned), run the pull pipeline, overwrite exactly those
-    * date partitions of RTMC_15MIN.
+    * and the day−7/day−14 history of each (partition-pruned), run the
+    * pull pipeline, overwrite exactly the planned date partitions of
+    * RTMC_15MIN.
     */
   def run(spark: SparkSession, wh: Warehouse, raw: DataFrame,
           config: DataFrame, asOf: String, lagDays: Int = 3,
           factTable: String = "RTMC_15MIN"): PlanResult = {
     val dates = planDates(wh, factTable, asOf, lagDays)
     if (dates.isEmpty) return PlanResult(Nil)
-    // J9's day−7/day−14 fill needs two weeks of history BEFORE the
-    // first planned date inside the same frame
-    val histLo = java.time.LocalDate.parse(dates.head).minusDays(14).toString
-    val slice = raw.where(col("date").between(lit(histLo), lit(dates.last)))
+    // J9's fill reads the same slot 7 and 14 days before each planned
+    // date; the dedup, buckets, rolling mean and P16's day filter are
+    // all local to one sensor-day, so no other day is needed
+    val needed = dates.map(java.time.LocalDate.parse)
+      .flatMap(d => Seq(d, d.minusDays(7), d.minusDays(14))).distinct.sortBy(_.toEpochDay)
+    val slice = raw.where(col("date").isin(
+      needed.map(d => lit(java.sql.Date.valueOf(d))): _*))
     val fact = SensorIngest.build(slice, config)
       .where(col("START_DATE").between(lit(dates.head), lit(dates.last)))
     // sink cast: NUMERIC(4,1) columns land as DecimalType(4,1) per the

@@ -10,12 +10,14 @@ import graft.ops._
   *
   * The reference runs this sensor-at-a-time across 5 forked R workers
   * with per-sensor day−7/day−14 DB lookups (an N+1 pattern). Here the
-  * whole flow is ONE declarative DAG: every step is a narrow projection
-  * or a key-partitioned aggregation/window, so Catalyst pipelines it
-  * into a few whole-stage-codegen spans; the history fill is a single
-  * co-partitioned self-join instead of 2×N point queries. At 100 TB the
-  * input is date-partitioned parquet and each day's partition processes
-  * independently (idempotent INSERT OVERWRITE per date).
+  * whole flow is ONE declarative DAG with ONE shuffle: the raw readings
+  * hash-partition on `sensor` once, and every later step (dedup, 15-min
+  * aggregate, sensor-day windows, the history window) clusters on a
+  * superset of that key, so Catalyst inserts no further Exchange. The
+  * history fill is one window over each sensor's 15-minute slot of the
+  * day instead of 2×N point queries. At 100 TB the input is
+  * date-partitioned parquet and a night reads only the days it writes
+  * plus their day−7/day−14 history (`Nightly.run`).
   */
 object SensorIngest {
 
@@ -24,9 +26,10 @@ object SensorIngest {
     * NODE_NAME, CORRIDOR_ROUTE) — broadcast, it is bounded.
     */
   def aggregate15Min(raw: DataFrame, config: DataFrame): DataFrame = {
-    // P11 dedup + P10 impossible-value scrub
+    // P11 dedup + P10 impossible-value scrub, on the pipeline's only
+    // shuffle: every step below keys on a superset of `sensor`
     val scrubbed = Tidy.replaceImpossible(
-      raw.dropDuplicates(Seq("sensor", "date", "hour", "min")),
+      raw.repartition(col("sensor")).dropDuplicates(Seq("sensor", "date", "hour", "min")),
       Map("volume" -> (0.0, Schemas.maxVolumePer30s),
         "occupancy" -> (0.0, Schemas.maxOccupancyPer30s)))
 
@@ -67,8 +70,9 @@ object SensorIngest {
     *  2. W1/W2 centered rolling mean (width 5) over the sensor's slots,
     *     filling slots the scale-up left NULL.
     *  3. J9/P14 history fill: NULL-skipping mean of the same 15-min slot
-    *     7 and 14 days earlier (one self-join, co-partitioned on
-    *     (DETECTOR_NAME, START_DATETIME)).
+    *     7 and 14 days earlier (one window per sensor and slot of day,
+    *     exact because (DETECTOR_NAME, START_DATETIME) is unique after
+    *     the 15-min group-by).
     */
   def impute(agg15: DataFrame): DataFrame = {
     val scaled = agg15
@@ -87,18 +91,16 @@ object SensorIngest {
       }
 
     // J9: attach day−7 and day−14 values of the same slot, then P14
-    val h7 = Joins.lagJoin(rolled, Seq("DETECTOR_NAME"), "START_DATETIME",
-      7L * 86400, Seq("VOLUME_SUM_IMPUTE", "OCCUPANCY_SUM_IMPUTE"), "_h7")
-    val h14 = Joins.lagJoin(h7, Seq("DETECTOR_NAME"), "START_DATETIME",
-      14L * 86400, Seq("VOLUME_SUM_IMPUTE", "OCCUPANCY_SUM_IMPUTE"), "_h14")
+    val hist = Windows.periodicLag(rolled, Seq("DETECTOR_NAME"), "START_DATETIME",
+      86400, Seq(7, 14), Seq("VOLUME_SUM_IMPUTE", "OCCUPANCY_SUM_IMPUTE"))
 
-    h14
+    hist
       .withColumn("VOLUME_SUM_IMPUTE", coalesce(col("VOLUME_SUM_IMPUTE"),
-        Numeric.roundAway(Tidy.rowMean2(col("VOLUME_SUM_IMPUTE_h7"), col("VOLUME_SUM_IMPUTE_h14")))))
+        Numeric.roundAway(Tidy.rowMean2(col("VOLUME_SUM_IMPUTE_lag7"), col("VOLUME_SUM_IMPUTE_lag14")))))
       .withColumn("OCCUPANCY_SUM_IMPUTE", coalesce(col("OCCUPANCY_SUM_IMPUTE"),
-        Numeric.roundAway(Tidy.rowMean2(col("OCCUPANCY_SUM_IMPUTE_h7"), col("OCCUPANCY_SUM_IMPUTE_h14")))))
-      .drop("VOLUME_SUM_IMPUTE_h7", "VOLUME_SUM_IMPUTE_h14",
-        "OCCUPANCY_SUM_IMPUTE_h7", "OCCUPANCY_SUM_IMPUTE_h14")
+        Numeric.roundAway(Tidy.rowMean2(col("OCCUPANCY_SUM_IMPUTE_lag7"), col("OCCUPANCY_SUM_IMPUTE_lag14")))))
+      .drop("VOLUME_SUM_IMPUTE_lag7", "VOLUME_SUM_IMPUTE_lag14",
+        "OCCUPANCY_SUM_IMPUTE_lag7", "OCCUPANCY_SUM_IMPUTE_lag14")
   }
 
   /** Full pull pipeline: raw 30-sec + config → RTMC_15MIN-shaped frame

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.traffic.{Schemas, SensorIngest}
+import graft.traffic.{EdgeRaw, Schemas, SensorIngest}
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §5 property tests beyond the per-operator specs. */
@@ -26,9 +26,13 @@ class PropertySpec extends SparkSpec {
   }
 
   test("15-min aggregation is partition-count invariant") {
-    val a = SensorIngest.build(completeRaw.repartition(1), config)
-    val b = SensorIngest.build(completeRaw.repartition(13), config)
-    assert(rows(a) == rows(b))
+    // complete data, then the FIXTURES A1 edge cases (NULL days and runs,
+    // half-empty buckets, missing history, duplicates)
+    for ((raw, cfg) <- Seq(completeRaw -> config, EdgeRaw(spark) -> EdgeRaw.config(spark))) {
+      val a = SensorIngest.build(raw.repartition(1), cfg)
+      val b = SensorIngest.build(raw.repartition(13), cfg)
+      assert(rows(a) == rows(b))
+    }
   }
 
   test("Retry.until: stops at first valid result, bounded attempts (S4)") {

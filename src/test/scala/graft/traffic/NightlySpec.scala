@@ -47,4 +47,44 @@ class NightlySpec extends SparkSpec {
       Schemas.conform(fact, Schemas.rtmc15MinSink), "RTMC_15MIN", "START_DATE")
     assert(wh.read("RTMC_15MIN").count() == 12 * 96)
   }
+
+  // date-partitioned like the nightly source, so the read is pruned
+  private lazy val edgeRaw = {
+    val dir = Files.createTempDirectory("raw").resolve("raw").toString
+    EdgeRaw(spark).write.partitionBy("date").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** A night planned over `nDays` dates from `first` writes exactly the
+    * rows a build over the whole `[first−14, last]` slice gives them.
+    */
+  private def assertNightParity(first: String, nDays: Int): Unit = {
+    val cfg = EdgeRaw.config(spark)
+    val lo = java.time.LocalDate.parse(first)
+    val hi = lo.plusDays(nDays - 1L)
+    def fullSlice(from: java.time.LocalDate, to: java.time.LocalDate) =
+      Schemas.conform(SensorIngest.build(edgeRaw.where($"date".between(
+        from.minusDays(14).toString, to.toString)), cfg), Schemas.rtmc15MinSink)
+        .where($"START_DATE".between(from.toString, to.toString))
+    val wh = new Warehouse(spark, Files.createTempDirectory("wh").toString)
+    // watermark on the day before `first`: the night plans first..hi
+    val mark = lo.minusDays(1)
+    wh.overwriteDatePartitions(fullSlice(mark, mark), "RTMC_15MIN", "START_DATE")
+    val r = Nightly.run(spark, wh, edgeRaw, cfg, hi.plusDays(3).toString)
+    assert(r.dates.map(_.toString) == (0 until nDays).map(lo.plusDays(_).toString))
+    val cols = Schemas.rtmc15MinSink.fieldNames.toSeq.map(col)
+    val written = wh.read("RTMC_15MIN")
+      .where($"START_DATE".between(lo.toString, hi.toString)).select(cols: _*)
+    val expected = fullSlice(lo, hi).select(cols: _*)
+    assert(written.count() > 0)
+    assert(rows(written) == rows(expected))
+  }
+
+  test("1-day night reads only its day and day−7/−14, same rows as the full slice") {
+    assertNightParity("2020-01-22", 1)
+  }
+
+  test("5-day night reads only its days and their day−7/−14, same rows as the full slice") {
+    assertNightParity("2020-01-19", 5)
+  }
 }
