@@ -18,27 +18,44 @@ final class Warehouse(spark: SparkSession, root: String) {
 
   /** S12 — table-exists probe gating run-once bootstraps. Hadoop FS
     * resolved from the path (not java.io.File), so the probe is correct
-    * on HDFS/S3 warehouses, not only local ones.
+    * on HDFS/S3 warehouses, not only local ones. A table stranded by an
+    * interrupted [[replace]] is recovered first, so a bootstrap gate
+    * never mistakes it for a missing table.
     */
   def exists(table: String): Boolean = {
+    recoverStranded(table)
     val (fs, p) = hadoopFs(path(table))
     fs.exists(p)
   }
 
-  /** Crash recovery for [[forget]]'s rename-rename swap: a failure
-    * between the two renames leaves the table stranded under
-    * `.forget_old` with no live path. Entry points that touch the table
-    * call this first — if the live path is missing but the staged-out
-    * copy exists, the rename is rolled forward and the table is
-    * readable again with no manual surgery. Single-writer assumption:
-    * the warehouse (like the reference's nightly job) has exactly one
-    * writer at a time; concurrent writers would race the swap itself,
-    * which no rename protocol on a non-transactional store can fix.
+  private def stagingPath(table: String) =
+    new org.apache.hadoop.fs.Path(path(table) + ".staging")
+  private def oldPath(table: String) =
+    new org.apache.hadoop.fs.Path(path(table) + ".old")
+
+  /** Crash recovery for [[replace]]'s rename-rename swap: a failure
+    * between the two renames leaves the previous state under `.old` and
+    * the fully written new state under `.staging`, with no live path.
+    * Entry points that touch the table call this first. The first rename
+    * runs only after the staged write committed (its `_SUCCESS` marker
+    * is there), so the swap is rolled forward to the staged state; a
+    * staging dir without the marker is not trusted and `.old` is rolled
+    * back instead. Either way the table is readable again with no manual
+    * surgery. Single-writer assumption: the warehouse (like the
+    * reference's nightly job) has exactly one writer at a time;
+    * concurrent writers would race the swap itself, which no rename
+    * protocol on a non-transactional store can fix.
     */
   private def recoverStranded(table: String): Unit = {
     val (fs, live) = hadoopFs(path(table))
-    val oldP = new org.apache.hadoop.fs.Path(path(table) + ".forget_old")
-    if (!fs.exists(live) && fs.exists(oldP)) fs.rename(oldP, live)
+    val oldP = oldPath(table)
+    if (!fs.exists(live) && fs.exists(oldP)) {
+      val stagingP = stagingPath(table)
+      if (fs.exists(new org.apache.hadoop.fs.Path(stagingP, "_SUCCESS"))) {
+        fs.rename(stagingP, live)
+        fs.delete(oldP, true)
+      } else fs.rename(oldP, live)
+    }
   }
 
   def read(table: String): DataFrame = {
@@ -67,11 +84,36 @@ final class Warehouse(spark: SparkSession, root: String) {
       .parquet(path(table))
 
   /** A9 — incremental watermark: max value of `dateCol`, None when the
-    * table doesn't exist yet (bootstrap case).
+    * table doesn't exist yet (bootstrap case) or holds no rows. A table
+    * partitioned by `dateCol` answers from its partition listing: the
+    * largest `dateCol=` directory name (URL-decoded, skipping the NULL
+    * partition `__HIVE_DEFAULT_PARTITION__` and directories without a
+    * data file) — no scan, no job, one listing however much history the
+    * table holds. Only a table with data but no such directories (e.g.
+    * one [[forget]] rewrote unpartitioned) or with a partition value
+    * that is not a plain date falls back to the `max` scan
+    * ([[graft.ops.Aggs.watermark]]).
     */
-  def watermark(table: String, dateCol: String): Option[java.sql.Date] =
-    if (!exists(table)) None
-    else graft.ops.Aggs.watermark(read(table), dateCol)
+  def watermark(table: String, dateCol: String): Option[java.sql.Date] = {
+    if (!exists(table)) return None
+    val (fs, dir) = hadoopFs(path(table))
+    val prefix = s"$dateCol="
+    val listing = fs.listStatus(dir).toSeq
+    val parts = listing
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .map(st => java.net.URLDecoder.decode(
+        st.getPath.getName.stripPrefix(prefix), "UTF-8") -> st.getPath)
+    val dated = parts.filter(_._1 != "__HIVE_DEFAULT_PARTITION__")
+      .map { case (v, p) => scala.util.Try(java.sql.Date.valueOf(v)).toOption -> p }
+    def scan = graft.ops.Aggs.watermark(read(table), dateCol)
+    if (parts.isEmpty) {
+      if (listing.exists(isDataFile)) scan else None
+    } else if (dated.exists(_._1.isEmpty)) scan
+    else dated.collect { case (Some(d), p) => d -> p }
+      .sortBy(-_._1.toLocalDate.toEpochDay)
+      .find { case (_, p) => fs.listStatus(p).exists(isDataFile) }
+      .map(_._1)
+  }
 
   /** Bucketed external table: pre-shuffled on `bucketCols` so joins and
     * aggregations on those keys read co-located, shuffle-free (the
@@ -153,33 +195,128 @@ final class Warehouse(spark: SparkSession, root: String) {
     * delete is a broadcast anti-join rewrite — at warehouse scale pair
     * this with date partitioning so only partitions actually holding
     * the keys rewrite; here the single-dir test shape rewrites the
-    * table. Crash-safety: the kept rows are FULLY written to a staging
-    * path first, then swapped in with two renames — a failure during
-    * the rewrite leaves the original table intact, and only the narrow
-    * rename-rename window (not the whole job) can strand the table
-    * under the `.old` name (recoverable by hand, never truncated).
+    * table. Crash-safe through [[replace]]: the kept rows are fully
+    * staged before the swap, so a failure leaves the original table
+    * intact.
     */
   def forget(table: String, keyCol: String, keys: DataFrame): Int = {
-    recoverStranded(table)
     val current = read(table)
+    val before = current.count()
     val k = keys.select(col(keyCol)).distinct()
-    val kept = current.join(broadcast(k), Seq(keyCol), "left_anti")
-    val staging = path(table) + ".forget_staging"
-    kept.write.mode("overwrite").parquet(staging)
-    val removed =
-      (current.count() - spark.read.parquet(staging).count()).toInt
+    replace(current.join(broadcast(k), Seq(keyCol), "left_anti"), table)
+    (before - read(table).count()).toInt
+  }
+
+  // ---- staged writes -------------------------------------------------
+  //
+  // A rewrite never writes into the directory it replaces: `df` is
+  // written whole to `<table>.staging`, then swapped in with two renames
+  // (live → `<table>.old`, staging → live). Until the first rename the
+  // live table is untouched, so a failed write — or a frame that reads
+  // the very table it rewrites — needs no checkpoint to be safe; after
+  // it, [[recoverStranded]] completes the swap.
+
+  private def isDataFile(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** Write `df` completely to the table's staging dir. A leftover
+    * staging dir from an interrupted run is cleared first; anything
+    * else at that path is not ours, so the write refuses it
+    * (ErrorIfExists) rather than deleting it.
+    */
+  private def stage(df: DataFrame, table: String): Unit = {
+    dropStaging(table)
+    df.write.mode("errorifexists").parquet(stagingPath(table).toString)
+  }
+
+  private def dropStaging(table: String): Unit = {
+    val (fs, _) = hadoopFs(path(table))
+    val p = stagingPath(table)
+    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.delete(p, true)
+  }
+
+  /** Swap the staged dir in: live → `.old`, staging → live, drop `.old`. */
+  private def swapIn(table: String): Unit = {
     val (fs, live) = hadoopFs(path(table))
-    val stagingP = new org.apache.hadoop.fs.Path(staging)
-    val oldP = new org.apache.hadoop.fs.Path(path(table) + ".forget_old")
+    val stagingP = stagingPath(table)
+    val oldP = oldPath(table)
     fs.delete(oldP, true)
-    if (!fs.rename(live, oldP))
-      throw new java.io.IOException(s"forget: cannot stage out $live")
+    if (fs.exists(live) && !fs.rename(live, oldP))
+      throw new java.io.IOException(s"replace: cannot stage out $live")
     if (!fs.rename(stagingP, live)) {
-      fs.rename(oldP, live) // restore
-      throw new java.io.IOException(s"forget: cannot swap in $stagingP")
+      if (fs.exists(oldP)) fs.rename(oldP, live) // restore
+      throw new java.io.IOException(s"replace: cannot swap in $stagingP")
     }
     fs.delete(oldP, true)
-    removed
+  }
+
+  /** Append the staged files: move every data file (and partition dir)
+    * of the staging dir into the live table — the whole dir when the
+    * table does not exist yet. Part-file names carry the write's job
+    * UUID, so they never collide with files already there.
+    */
+  private def appendStaged(table: String): Unit = {
+    val (fs, live) = hadoopFs(path(table))
+    val stagingP = stagingPath(table)
+    def moveInto(from: org.apache.hadoop.fs.Path,
+                 to: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(from).filter(isDataFile).foreach { st =>
+        val dst = new org.apache.hadoop.fs.Path(to, st.getPath.getName)
+        if (st.isDirectory && fs.exists(dst)) moveInto(st.getPath, dst)
+        else if (!fs.rename(st.getPath, dst))
+          throw new java.io.IOException(s"append: cannot move ${st.getPath} to $dst")
+      }
+    if (!fs.exists(live)) {
+      if (!fs.rename(stagingP, live))
+        throw new java.io.IOException(s"append: cannot move $stagingP to $live")
+    } else {
+      moveInto(stagingP, live)
+      fs.delete(stagingP, true)
+    }
+  }
+
+  /** S9, crash-safe — replace `table` with `df` by a staged write and a
+    * rename swap. `df` may read `table` itself: the live files are
+    * untouched until `df` is fully written.
+    */
+  def replace(df: DataFrame, table: String): Unit =
+    commit(replace = Seq(table -> df))
+
+  /** Commit several writes as one unit: every write is staged at the
+    * same time (all but the first on a pooled thread that carries the
+    * caller's Spark local properties — job group, scheduler pool, the
+    * tracer's span — as Spark does for broadcasts), and only when all of
+    * them have succeeded does the commit touch a live table: first the
+    * `append` files are moved in, then the `replace` tables are swapped.
+    * A failed write leaves every table as it was. The commit itself is
+    * renames only; a crash inside it can land the appends without the
+    * swaps (a re-run may append again), never the reverse.
+    */
+  def commit(replace: Seq[(String, DataFrame)] = Nil,
+             append: Seq[(String, DataFrame)] = Nil): Unit = {
+    val writes = replace ++ append
+    require(writes.nonEmpty, "commit needs at least one write")
+    require(writes.map(_._1).distinct.size == writes.size,
+      "commit: each table at most once")
+    writes.foreach { case (t, _) => recoverStranded(t) }
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val pending = writes.tail.map { case (t, df) =>
+      org.apache.spark.sql.execution.SQLExecution
+        .withThreadLocalCaptured(classic, Warehouse.stagingPool)(stage(df, t))
+    }
+    val outcomes = scala.util.Try(stage(writes.head._2, writes.head._1)) +:
+      pending.map(f => scala.util.Try(f.get()))
+    outcomes.collectFirst { case scala.util.Failure(e) => e }.foreach { e =>
+      writes.foreach { case (t, _) => dropStaging(t) }
+      throw (e match {
+        case x: java.util.concurrent.ExecutionException if x.getCause != null => x.getCause
+        case x => x
+      })
+    }
+    append.foreach { case (t, _) => appendStaged(t) }
+    replace.foreach { case (t, _) => swapIn(t) }
   }
 
   /** Retention expiry: drop date partitions older than `keepFrom` from
@@ -314,4 +451,16 @@ final class Warehouse(spark: SparkSession, root: String) {
     drop.foreach(v => fs.delete(versionDir(table, v), true))
     drop
   }
+}
+
+object Warehouse {
+  /** Threads for [[Warehouse.commit]]'s concurrent staged writes:
+    * daemon, created on demand and retired when idle.
+    */
+  private lazy val stagingPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "warehouse-stage")
+      t.setDaemon(true)
+      t
+    }
 }

@@ -41,28 +41,55 @@ object Glm {
     pen
   }
 
-  /** Weighted penalized least squares via normal equations + Cholesky:
-    * (X'WX + ridge·I + penalty) beta = X'Wz.
+  /** Column indices of each row's nonzero entries, ascending. A GAM
+    * design row has about 10 nonzeros out of p ≈ 79 (one weekday dummy,
+    * the B-spline bases' local support), so the O(n·p²) and O(n·p)
+    * kernels below run over these instead of all p columns. Every
+    * skipped term is a product with an exact ±0.0 and adding it never
+    * changes a sum that starts at +0.0, and each sum still runs over
+    * the rows in order, so the results are bit-identical to the dense
+    * loops.
     */
-  private def solveWLS(x: Array[Array[Double]], z: Array[Double],
-                       w: Array[Double], ridge: Double,
-                       penalty: Array[Array[Double]]): Array[Double] = {
+  private def nonzeros(x: Array[Array[Double]]): Array[Array[Int]] =
+    x.map { xi =>
+      val idx = new Array[Int](xi.length)
+      var k = 0
+      var j = 0
+      while (j < xi.length) { if (xi(j) != 0.0) { idx(k) = j; k += 1 }; j += 1 }
+      java.util.Arrays.copyOf(idx, k)
+    }
+
+  /** x·β over the row's nonzeros. */
+  private def dot(xi: Array[Double], nzi: Array[Int], beta: Array[Double]): Double = {
+    var e = 0.0
+    var k = 0
+    while (k < nzi.length) { val j = nzi(k); e += xi(j) * beta(j); k += 1 }
+    e
+  }
+
+  /** X'WX (upper triangle mirrored) and, when `z` is given, X'Wz. */
+  private def normalEquations(x: Array[Array[Double]], nz: Array[Array[Int]],
+                              w: Array[Double], z: Array[Double])
+      : (Array[Array[Double]], Array[Double]) = {
     val p = x(0).length
     val ata = Array.ofDim[Double](p, p)
     val atb = new Array[Double](p)
     var i = 0
     while (i < x.length) {
-      val xi = x(i); val wi = w(i); val zi = z(i)
-      var a = 0
-      while (a < p) {
+      val xi = x(i); val nzi = nz(i); val wi = w(i)
+      var ka = 0
+      while (ka < nzi.length) {
+        val a = nzi(ka)
         val xa = xi(a) * wi
-        atb(a) += xa * zi
-        var b = a
-        while (b < p) {
-          ata(a)(b) += xa * xi(b)
-          b += 1
+        if (z != null) atb(a) += xa * z(i)
+        val row = ata(a)
+        var kb = ka
+        while (kb < nzi.length) {
+          val b = nzi(kb)
+          row(b) += xa * xi(b)
+          kb += 1
         }
-        a += 1
+        ka += 1
       }
       i += 1
     }
@@ -72,7 +99,18 @@ object Glm {
       while (b < p) { ata(b)(a) = ata(a)(b); b += 1 }
       a += 1
     }
-    a = 0
+    (ata, atb)
+  }
+
+  /** Weighted penalized least squares via normal equations + Cholesky:
+    * (X'WX + ridge·I + penalty) beta = X'Wz.
+    */
+  private def solveWLS(x: Array[Array[Double]], nz: Array[Array[Int]],
+                       z: Array[Double], w: Array[Double], ridge: Double,
+                       penalty: Array[Array[Double]]): Array[Double] = {
+    val p = x(0).length
+    val (ata, atb) = normalEquations(x, nz, w, z)
+    var a = 0
     while (a < p) {
       ata(a)(a) += ridge
       if (penalty != null) {
@@ -87,7 +125,7 @@ object Glm {
   /** In-place Cholesky factorization + solve; falls back to adding
     * jitter on non-PD (collinear basis columns).
     */
-  private def choleskySolve(m: Array[Array[Double]], b: Array[Double]): Array[Double] = {
+  private[model] def choleskySolve(m: Array[Array[Double]], b: Array[Double]): Array[Double] = {
     val p = b.length
     var jitter = 0.0
     var attempts = 0
@@ -149,6 +187,7 @@ object Glm {
           penalty: Array[Array[Double]] = null, mlTheta: Boolean = true): Fit = {
     val n = y.length
     val p = x(0).length
+    val nz = nonzeros(x)
     var beta = new Array[Double](p)
     // init: intercept at log(mean), guard all-zero groups
     val ybar = math.max(y.sum / n, 1e-3)
@@ -166,11 +205,7 @@ object Glm {
       while (iter < iters && !converged) {
         var i = 0
         while (i < n) {
-          var e = 0.0
-          val xi = x(i)
-          var j = 0
-          while (j < p) { e += xi(j) * beta(j); j += 1 }
-          eta(i) = math.max(-30, math.min(30, e))
+          eta(i) = math.max(-30, math.min(30, dot(x(i), nz(i), beta)))
           mu(i) = math.exp(eta(i))
           // working response + weights for log link:
           // z = eta + (y-mu)/mu ; w = mu (Poisson) or mu/(1+alpha*mu) (NB2)
@@ -178,7 +213,7 @@ object Glm {
           w(i) = if (negBin) mu(i) / (1.0 + alpha * mu(i)) else mu(i)
           i += 1
         }
-        val newBeta = solveWLS(x, z, w, ridge, penalty)
+        val newBeta = solveWLS(x, nz, z, w, ridge, penalty)
         var delta = 0.0
         var j = 0
         while (j < p) {
@@ -204,9 +239,7 @@ object Glm {
       // refresh μ at the final β (the loop's μ lags one solve behind)
       var i = 0
       while (i < n) {
-        var e = 0.0; val xi = x(i); var j = 0
-        while (j < p) { e += xi(j) * beta(j); j += 1 }
-        mu(i) = math.exp(math.max(-30, math.min(30, e)))
+        mu(i) = math.exp(math.max(-30, math.min(30, dot(x(i), nz(i), beta))))
         i += 1
       }
     }
@@ -312,31 +345,6 @@ object Glm {
     d
   }
 
-  /** X'WX at weights w (upper triangle mirrored). */
-  private def crossProd(x: Array[Array[Double]], w: Array[Double]): Array[Array[Double]] = {
-    val p = x(0).length
-    val ata = Array.ofDim[Double](p, p)
-    var i = 0
-    while (i < x.length) {
-      val xi = x(i); val wi = w(i)
-      var a = 0
-      while (a < p) {
-        val xa = xi(a) * wi
-        var b = a
-        while (b < p) { ata(a)(b) += xa * xi(b); b += 1 }
-        a += 1
-      }
-      i += 1
-    }
-    var a = 0
-    while (a < p) {
-      var b = a + 1
-      while (b < p) { ata(b)(a) = ata(a)(b); b += 1 }
-      a += 1
-    }
-    ata
-  }
-
   /** Effective degrees of freedom of the penalized fit:
     * tr[(X'WX + S + ridge·I)⁻¹ X'WX] — the trace of the IRLS influence
     * map (mgcv's edf). p×p only; never touches the n-row data again.
@@ -380,16 +388,17 @@ object Glm {
             negBin: Boolean, penalty: Array[Array[Double]],
             lambda: Double, ridge: Double = 1e-6): Scored = {
     val n = y.length
+    val nz = nonzeros(x)
     val mu = new Array[Double](n)
     val w = new Array[Double](n)
     var i = 0
     while (i < n) {
-      mu(i) = predict(x(i), f.beta)
+      mu(i) = math.exp(math.max(-30, math.min(30, dot(x(i), nz(i), f.beta))))
       w(i) = if (negBin) mu(i) / (1.0 + f.alpha * mu(i)) else mu(i)
       i += 1
     }
     val dev = deviance(y, mu, f.alpha, negBin)
-    val df = edf(crossProd(x, w), penalty, ridge)
+    val df = edf(normalEquations(x, nz, w, null)._1, penalty, ridge)
     val denom = math.max(n - df, 1e-6)
     Scored(f, lambda, dev, df, n * dev / (denom * denom))
   }

@@ -106,6 +106,12 @@ object Scd2 {
 
   /** One merge step: `current` dimension state (unique per key) ⊕ new
     * `snapshot` (key + attrCols) as of date `asOf` (an ISO yyyy-MM-dd).
+    *
+    * Both outputs are lazy over `current`. When `current` is read from
+    * the table the new dimension replaces, write the outputs to staging
+    * and swap them in afterwards (`Warehouse.commit`, as
+    * `ConfigNightly.run` does) — an in-place overwrite would delete the
+    * files the merge is still reading.
     */
   def merge(current: DataFrame, snapshot: DataFrame, asOf: String,
             opts: Options): Result = {

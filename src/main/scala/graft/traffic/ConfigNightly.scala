@@ -9,8 +9,9 @@ import graft.sources.ConfigXml
   * (reference /root/reference/R/3) Update-Configuration-Nightly.R:10-31
   * nightly, and R/1) Get-Historical-Configuration-Data-RunOnce.R:20-53
   * backfill). Parse snapshot(s) → SCD-2 merge → rewrite dimension,
-  * append changelog. The reference's per-changed-cell UPDATE round
-  * trips (its second N+1 pattern) become one set-based merge.
+  * append changelog, committed together. The reference's
+  * per-changed-cell UPDATE round trips (its second N+1 pattern) become
+  * one set-based merge.
   */
 object ConfigNightly {
 
@@ -24,23 +25,28 @@ object ConfigNightly {
     abandonedCol = Some("DETECTOR_ABANDONED"),
     lastChangeCol = Some("LAST_CHANGE_DATE"))
 
-  /** Nightly: merge one dated snapshot into the warehouse dimension.
-    * Bootstraps (S12 gate) if the dimension doesn't exist yet.
+  /** Nightly: merge one dated snapshot into the warehouse dimension and
+    * log the night's changes, as one staged commit
+    * ([[Warehouse.commit]]). The merged dimension and the changelog are
+    * written at the same time to staging dirs; only when both writes
+    * have succeeded are the changelog's files moved into
+    * `RTMC_CONFIG_CHANGELOG` and the dimension swapped in by rename. The
+    * merge reads the dimension it rewrites, which is safe without a
+    * checkpoint because the live files stay untouched until the swap.
+    * If either write fails, both tables stay as they were, so a re-run
+    * of the night logs its changes exactly once. Bootstraps (S12 gate)
+    * if the dimension doesn't exist yet.
     */
   def run(spark: SparkSession, wh: Warehouse, snapshotPath: String): Unit = {
     val asOf = ConfigXml.dateFromPath(snapshotPath).toString
     val snapshot = ConfigXml.readSnapshot(spark, snapshotPath)
     if (!wh.exists(dimTable)) {
       val r = Scd2.replay(Seq(asOf -> snapshot), scdOptions)
-      wh.overwrite(r.dim, dimTable)
+      wh.replace(r.dim, dimTable)
     } else {
       val r = Scd2.merge(wh.read(dimTable), snapshot, asOf, scdOptions)
-      // materialize before the rewrite: both frames read the table
-      // being overwritten
-      val dim = r.dim.localCheckpoint(true)
-      val log = r.changelog.localCheckpoint(true)
-      wh.overwrite(dim, dimTable)
-      wh.append(log, logTable)
+      wh.commit(replace = Seq(dimTable -> r.dim),
+        append = Seq(logTable -> r.changelog))
     }
   }
 

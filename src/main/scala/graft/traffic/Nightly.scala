@@ -25,7 +25,9 @@ object Nightly {
 
   /** Plan the dates to (re)process: watermark+1 … asOf−lagDays
     * (3-day upstream availability lag, reference
-    * R/4) Update-SensorData-Nightly.R:11).
+    * R/4) Update-SensorData-Nightly.R:11). The watermark comes from the
+    * fact's `START_DATE=` partition listing ([[Warehouse.watermark]]),
+    * so planning runs no Spark job.
     */
   def planDates(wh: Warehouse, factTable: String, asOf: String,
                 lagDays: Int = 3, bootstrapDays: Int = 7): Seq[String] = {

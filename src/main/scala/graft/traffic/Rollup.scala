@@ -67,7 +67,13 @@ object Rollup {
     *  1. all detectors reporting: VOLUME_NUM == DETECTOR_NUM;
     *  2. node has > 100 rows and median volume ≥ 40·scale;
     *  3. (modeling only) ≥ `minComplete` of expected rows in EVERY
-    *     year of `years`.
+    *     year of `years` in which the node has rows.
+    *
+    * Test 3 is two windows over the `NODE_NAME` partitions test 2
+    * already uses: the per-(node, year) row count, then its per-node
+    * minimum share — the same admission as semi-joining
+    * [[graft.ops.Aggs.completeKeys]] back, without scanning and
+    * aggregating the rollup a second time.
     */
   def qaqc(df: DataFrame, scale: Int, years: Seq[Int] = Nil,
            minComplete: Double = 0.75): DataFrame = {
@@ -78,11 +84,16 @@ object Rollup {
     if (years.isEmpty) t2
     else {
       val expected = lit(365.0 * 24 / scale)
-      val inYears = t2.where(year(col("START_DATETIME")).isin(years: _*))
-        .withColumn("__y", year(col("START_DATETIME")))
-      val keep = Aggs.completeKeys(inYears, Seq("NODE_NAME"), "__y",
-        expected, minComplete)
-      Joins.semiFilter(t2, keep, Seq("NODE_NAME"))
+      val y = year(col("START_DATETIME"))
+      // rows outside `years` get a NULL year: their own count group,
+      // and a NULL share that min() skips
+      val inYear = when(y.isin(years: _*), y)
+      t2.withColumn("__y", inYear)
+        .withColumn("__pct", when(col("__y").isNotNull,
+          count(lit(1)).over(Window.partitionBy(col("NODE_NAME"), col("__y"))) / expected))
+        .withColumn("__minpct", min(col("__pct")).over(Window.partitionBy(col("NODE_NAME"))))
+        .where(col("__minpct") >= minComplete)
+        .drop("__y", "__pct", "__minpct")
     }
   }
 }

@@ -83,4 +83,48 @@ class ConfigNightlySpec extends SparkSpec {
     assert(log.where($"Change" === "Attribute Changed: DETECTOR_LANE").count() == 2)
     assert(log.where($"Change" === "Detector Removed").count() == 1)
   }
+
+  test("a failed staged write leaves both tables as they were; a re-run logs the night once") {
+    val whRoot = Files.createTempDirectory("cfg_wh3").toString
+    val snapDir = Files.createTempDirectory("cfg_snaps3")
+    val wh = new Warehouse(spark, whRoot)
+    ConfigNightly.run(spark, wh,
+      writeGz(snapDir, "metro_config_20230101.xml.gz", snapshotXml("1", with101 = true)))
+    ConfigNightly.run(spark, wh,
+      writeGz(snapDir, "metro_config_20230102.xml.gz", snapshotXml("7", with101 = false)))
+    val dimBefore = rows(wh.read(ConfigNightly.dimTable))
+    val logBefore = rows(wh.read(ConfigNightly.logTable))
+
+    // a plain file squats on the changelog's staging path: that write
+    // fails while the dimension's concurrent write succeeds
+    val squat = Files.write(
+      java.nio.file.Paths.get(whRoot, ConfigNightly.logTable + ".staging"),
+      "not a table".getBytes("UTF-8"))
+    val night3 = writeGz(snapDir, "metro_config_20230103.xml.gz",
+      snapshotXml("9", with101 = false))
+    intercept[Exception](ConfigNightly.run(spark, wh, night3))
+    assert(rows(wh.read(ConfigNightly.dimTable)) == dimBefore)
+    assert(rows(wh.read(ConfigNightly.logTable)) == logBefore)
+    assert(!Files.exists(java.nio.file.Paths.get(whRoot, ConfigNightly.dimTable + ".staging")))
+
+    // the clean re-run commits the night, with no cached or
+    // checkpointed blocks left behind
+    Files.delete(squat)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    ConfigNightly.run(spark, wh, night3)
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted)
+    assert(wh.read(ConfigNightly.dimTable).where($"DETECTOR_NAME" === "100")
+      .head().getAs[String]("DETECTOR_LANE") == "9")
+    val log = wh.read(ConfigNightly.logTable)
+      .select($"Update_Date".cast("string"), $"Change", $"DETECTOR_NAME",
+        $"Old_Value", $"New_Value")
+      .as[(String, String, String, String, String)].collect().toSeq
+    assert(log.sortBy(_.toString) == Seq(
+      ("2023-01-02", "Attribute Changed: DETECTOR_LANE", "100", "1", "7"),
+      ("2023-01-02", "Detector Removed", "101", null, null),
+      ("2023-01-03", "Attribute Changed: DETECTOR_LANE", "100", "7", "9"))
+      .sortBy(_.toString))
+    assert(new java.io.File(whRoot).list().toSet ==
+      Set(ConfigNightly.dimTable, ConfigNightly.logTable))
+  }
 }
