@@ -176,7 +176,7 @@ object Graph {
     * per-iteration aggregation is a partial-agg groupBy on dst. Ranks
     * are checkpointed every `checkpointEvery` rounds so the plan stays
     * O(cadence) deep regardless of iteration count (same lineage
-    * discipline as Dedup/Scd2.replay) while short runs fuse into one
+    * discipline as Dedup) while short runs fuse into one
     * job with no per-round materialization.
     *
     * THE ×100 STORY is `tolScaled` (round-9): per-iteration cost is one

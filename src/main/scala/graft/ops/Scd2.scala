@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   * replaces the reference's per-cell UPDATE round-trips, its N+1
   * pattern); the changelog is built by unpivoting (old,new) column pairs
   * with `stack` and filtering changed cells. At scale both sides shuffle
-  * once on the key — or the snapshot broadcasts when bounded.
+  * once on the key — or the snapshot broadcasts when bounded. The
+  * historical backfill (`history`) derives what folding `merge` over
+  * every snapshot would leave in one windowed pass instead.
   *
   * Reference semantics preserved (SURVEY.md §2.8):
   *  - inserts get (START_DATE=asOf, END_DATE=openEnd, DEACTIVATE=false)
@@ -58,50 +60,108 @@ object Scd2 {
 
   final case class Result(dim: DataFrame, changelog: DataFrame)
 
-  /** Historical backfill: fold dated snapshots (oldest first) through
-    * `merge`, accumulating the changelog — the set-based replacement
-    * for the reference's ~1,423-iteration daily loop
-    * (R/1) Get-Historical-Configuration-Data-RunOnce.R:31-52). The very
-    * first snapshot bootstraps the dimension (START_DATE = its date,
-    * open END_DATE) with no changelog rows, matching the run-once
-    * initial load (R/1) Get-…-RunOnce.R:23-28).
+  /** Historical backfill in one pass: the dimension and the whole
+    * changelog that folding `merge` over the listed snapshots (oldest
+    * first) would leave, derived set-based — the replacement for the
+    * reference's ~1,423-iteration daily loop
+    * (R/1) Get-Historical-Configuration-Data-RunOnce.R:31-52). The first
+    * listed date bootstraps the dimension with no changelog rows, as
+    * the run-once initial load does (R/1) Get-…-RunOnce.R:23-28).
     *
-    * Each fold step shuffles only the (small) dimension; the
-    * accumulated plan is truncated with `localCheckpoint` every
-    * `checkpointEvery` steps — without it, the reference's ~1,423 daily
-    * snapshots stack 1,423 merges into one logical plan and analysis
-    * alone explodes long before execution does.
+    * `snapshots` holds every snapshot's rows (key + attrCols), each
+    * tagged with its snapshot date in `dateCol`, one row per key and
+    * date; `dates` lists every snapshot (ISO yyyy-MM-dd), including
+    * those with no rows, which close every open key. Rows dated
+    * outside the listing are ignored. One window partitioned by the
+    * key and ordered by date compares each appearance with the key's
+    * previous one and with the next listed date (a tiny broadcast
+    * table), so the plan and the shuffle are the same whatever the
+    * number of snapshots. Merge's rules, per key:
+    *  - START_DATE is the first appearance; the attributes are the
+    *    last appearance's; a first appearance after the first listed
+    *    date logs "New Detector Added";
+    *  - an appearance whose value differs null-safely from the previous
+    *    appearance logs the cell change and stamps `lastChangeCol`
+    *    (else it keeps the first appearance's date);
+    *  - a gap is a key missing from the next listed snapshot; the
+    *    first gap logs "Detector Removed" at that date unless an
+    *    abandoned flip came before it (the key was already closed);
+    *  - END_DATE is the last abandoned flip's end (its date for f→t,
+    *    `abandonedRevertEnd` for t→f), else the first gap's date, else
+    *    `openEnd`; DEACTIVATE is set by any flip or gap.
     */
-  def replay(snapshots: Seq[(String, DataFrame)], opts: Options,
-             checkpointEvery: Int = 50): Result = {
-    require(snapshots.nonEmpty, "replay needs at least one snapshot")
-    require(checkpointEvery > 0, "checkpointEvery must be positive")
-    import org.apache.spark.sql.functions.{lit, to_date}
-    val (d0, s0) = snapshots.head
-    val init = s0
-      .withColumn(opts.startCol, to_date(lit(d0)))
-      .withColumn(opts.endCol, to_date(lit(opts.openEnd)))
-      .withColumn(opts.deactivateCol, lit(false))
-    val empty = emptyChangelog(s0.sparkSession, opts)
-    snapshots.tail.zipWithIndex.foldLeft(Result(init, empty)) {
-      case (acc, ((day, snap), i)) =>
-        val r = merge(acc.dim, snap, day, opts)
-        val next = Result(r.dim, acc.changelog.unionByName(r.changelog))
-        if ((i + 1) % checkpointEvery == 0)
-          Result(next.dim.localCheckpoint(), next.changelog.localCheckpoint())
-        else next
-    }
-  }
-
-  private def emptyChangelog(spark: org.apache.spark.sql.SparkSession,
-                             opts: Options): DataFrame = {
+  def history(snapshots: DataFrame, dateCol: String, dates: Seq[String],
+              opts: Options): Result = {
+    import opts._
+    require(dates.nonEmpty, "history needs at least one snapshot date")
+    require(dates.distinct.size == dates.size, "history: each snapshot date listed once")
+    require(nullSafeDiff, "history diffs null-safely; nullSafeDiff = false is merge-only")
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
-    val cn = opts.changeCols
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField(cn.updateDate, DateType), StructField(cn.change, StringType),
-        StructField(opts.key, StringType), StructField(cn.oldValue, StringType),
-        StructField(cn.newValue, StringType), StructField(cn.lastUpdate, DateType))))
+    import scala.jdk.CollectionConverters._
+    val days = dates.map(java.sql.Date.valueOf).sortBy(_.getTime)
+    val listing = snapshots.sparkSession.createDataFrame(
+      days.zip(days.tail.map(Option(_)) :+ None)
+        .map { case (d, next) => Row(d, next.orNull, d == days.head) }.asJava,
+      StructType(Seq(StructField("__d", DateType), StructField("__next", DateType),
+        StructField("__first", BooleanType))))
+
+    val w = Window.partitionBy(key).orderBy("__d")
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val prev: String => Column = c => col(s"__prev_$c")
+    val seen = col("__seen")
+    val flipEnd = abandonedCol.map { a =>
+      when(prev(a) === "f" && col(a) === "t", col("__d"))
+        .when(prev(a) === "t" && col(a) === "f", to_date(lit(abandonedRevertEnd)))
+    }.getOrElse(lit(null).cast(DateType))
+    val anyAttrChanged = attrCols.map(c => !(prev(c) <=> col(c)))
+      .reduceOption(_ || _).getOrElse(lit(false)) && seen
+
+    val rows = snapshots
+      .select(col(key) +: attrCols.map(col) :+ to_date(col(dateCol)).as("__d"): _*)
+      .join(broadcast(listing), "__d")
+      .select(col("*") +: attrCols.map(c => lag(col(c), 1).over(w).as(s"__prev_$c")) :+
+        lag(col("__d"), 1).over(w).isNotNull.as("__seen") :+
+        lead(col("__d"), 1).over(w).as("__nextSeen"): _*)
+      .withColumn("__gapAt",
+        when(!(col("__nextSeen") <=> col("__next")), col("__next")))
+      .select(col("*"),
+        first(col("__d")).over(upTo).as("__start"),
+        first(col("__gapAt"), ignoreNulls = true).over(upTo).as("__firstGap"),
+        last(flipEnd, ignoreNulls = true).over(upTo).as("__lastFlipEnd"),
+        max(when(anyAttrChanged, col("__d"))).over(upTo).as("__lastChange"))
+
+    val lastChangeOut = lastChangeCol.toSeq.map(lc =>
+      coalesce(col("__lastChange"), col("__start")).as(lc))
+    val dim = rows.where(col("__nextSeen").isNull).select(
+      (col(key) +: attrCols.map(col)) ++ lastChangeOut :+
+        col("__start").as(startCol) :+
+        coalesce(col("__lastFlipEnd"), col("__firstGap"), to_date(lit(openEnd))).as(endCol) :+
+        (col("__lastFlipEnd").isNotNull || col("__firstGap").isNotNull).as(deactivateCol): _*)
+
+    // ---- changelog: each row emits its candidate log entries via one
+    // stack; a candidate with a NULL date did not happen ----
+    val none = lit(null).cast(StringType)
+    val isRemoval = col("__gapAt") === col("__firstGap") && col("__lastFlipEnd").isNull
+    val candidates =
+      Seq(lit("New Detector Added"), none, none,
+        when(!seen && !col("__first"), col("__d")),
+        lit("Detector Removed"), none, none, when(isRemoval, col("__gapAt"))) ++
+      attrCols.flatMap { c =>
+        val (o, n) = (prev(c).cast(StringType), col(c).cast(StringType))
+        Seq(lit(s"Attribute Changed: $c"), o, n, when(seen && !(o <=> n), col("__d")))
+      }
+    val cn = changeCols
+    val changelog = rows
+      .select(col(key), stack(lit(attrCols.size + 2) +: candidates: _*)
+        .as(Seq("__change", "__old", "__new", "__at")))
+      .where(col("__at").isNotNull)
+      .select(col("__at").as(cn.updateDate), col("__change").as(cn.change), col(key),
+        col("__old").as(cn.oldValue), col("__new").as(cn.newValue),
+        col("__at").as(cn.lastUpdate))
+
+    Result(dim, changelog)
   }
 
   /** One merge step: `current` dimension state (unique per key) ⊕ new

@@ -102,26 +102,6 @@ object ConfigXml {
     out.toSeq
   }
 
-  /** Early-exit probe: does this snapshot stream contain at least one
-    * `detector` element? Stops at the first hit, so a normal (non-empty)
-    * snapshot costs a few KB of parsing, not a full pass — the check the
-    * listing-only aggregate pushdown uses to guarantee its answer is a
-    * date some ROW actually carries, not just a file name.
-    */
-  def hasDetectorRow(in: InputStream): Boolean = {
-    val f = XMLInputFactory.newInstance()
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    val r = f.createXMLStreamReader(in)
-    try {
-      while (r.hasNext) {
-        if (r.next() == XMLStreamConstants.START_ELEMENT &&
-            r.getLocalName == "detector") return true
-      }
-      false
-    } finally r.close()
-  }
-
   /** yyyyMMdd date embedded in a snapshot path
     * (`…config_20230115.xml.gz`, P4).
     */
@@ -144,11 +124,12 @@ object ConfigXml {
       spark.sparkContext.parallelize(rows.toList, 1), schema)
   }
 
-  /** A directory of snapshot files (the ~1,400-file backfill case):
-    * executors parse in parallel, one task per file.
+  /** Many snapshot files (the ~1,400-file backfill case), given as a
+    * directory or a comma-separated list of paths: executors parse in
+    * parallel, one task per file.
     */
-  def readSnapshots(spark: SparkSession, dir: String): DataFrame = {
-    val rdd = spark.sparkContext.binaryFiles(dir)
+  def readSnapshots(spark: SparkSession, paths: String): DataFrame = {
+    val rdd = spark.sparkContext.binaryFiles(paths)
       .flatMap { case (path, pds) =>
         val in = open(path, pds.open())
         try parse(in, dateFromPath(path)) finally in.close()

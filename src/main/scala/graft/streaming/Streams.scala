@@ -397,11 +397,11 @@ object Streams {
     * nightly job in the same Trigger.AvailableNow shape as the sensor
     * half ([[mergeAggStream]]). Each micro-batch may carry several
     * snapshot days (a backfill); days fold through `Scd2.merge` in
-    * date order against the stored dimension, exactly the
-    * `Scd2.replay` fold — so the streamed dimension and changelog are
-    * hash-equal to a batch replay of the same snapshots (pinned by
+    * date order against the stored dimension, so the streamed
+    * dimension and changelog are hash-equal to the one-pass batch
+    * backfill `Scd2.history` of the same snapshots (pinned by
     * StreamsSpec). The first-ever snapshot bootstraps the dimension
-    * with no changelog rows, matching replay's run-once initial load.
+    * with no changelog rows, matching the run-once initial load.
     *
     * State discipline: the dimension itself IS the state, stored in
     * the warehouse (key-space sized, not history-sized); the changelog

@@ -41,7 +41,7 @@ object ConfigNightly {
     val asOf = ConfigXml.dateFromPath(snapshotPath).toString
     val snapshot = ConfigXml.readSnapshot(spark, snapshotPath)
     if (!wh.exists(dimTable)) {
-      val r = Scd2.replay(Seq(asOf -> snapshot), scdOptions)
+      val r = Scd2.history(snapshot, "LAST_CHANGE_DATE", Seq(asOf), scdOptions)
       wh.replace(r.dim, dimTable)
     } else {
       val r = Scd2.merge(wh.read(dimTable), snapshot, asOf, scdOptions)
@@ -50,19 +50,23 @@ object ConfigNightly {
     }
   }
 
-  /** Backfill: fold every snapshot in `dir` (ordered by embedded date)
-    * through the merge, then write final dimension + full changelog.
+  /** Backfill: derive the dimension and the full changelog from every
+    * `.xml`/`.xml.gz` snapshot listed in `dir` in one pass
+    * ([[Scd2.history]]). The listed files are parsed by one
+    * executor-parallel scan, and the listing's dates are the snapshot
+    * dates, so a snapshot without detector rows still closes every open
+    * key. Both tables are replaced as one staged commit: if either
+    * write fails, both stay as they were.
     */
   def backfill(spark: SparkSession, wh: Warehouse, dir: String): Unit = {
-    val files = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.endsWith(".xml") || f.getName.endsWith(".xml.gz"))
-      .sortBy(f => ConfigXml.dateFromPath(f.getName).toString)
-    val snaps = files.toSeq.map { f =>
-      ConfigXml.dateFromPath(f.getName).toString ->
-        ConfigXml.readSnapshot(spark, f.getPath)
-    }
-    val r = Scd2.replay(snaps, scdOptions)
-    wh.overwrite(r.dim, dimTable)
-    wh.overwrite(r.changelog, logTable)
+    val listed = Option(new java.io.File(dir).listFiles()).getOrElse(
+      throw new IllegalArgumentException(s"backfill: $dir is not a readable directory"))
+    val files = listed.toSeq.filter(f => f.isFile &&
+      (f.getName.endsWith(".xml") || f.getName.endsWith(".xml.gz")))
+    require(files.nonEmpty, s"backfill: no .xml or .xml.gz snapshot in $dir")
+    val dates = files.map(f => ConfigXml.dateFromPath(f.getName).toString)
+    val snapshots = ConfigXml.readSnapshots(spark, files.map(_.getPath).mkString(","))
+    val r = Scd2.history(snapshots, "LAST_CHANGE_DATE", dates, scdOptions)
+    wh.commit(replace = Seq(dimTable -> r.dim, logTable -> r.changelog))
   }
 }

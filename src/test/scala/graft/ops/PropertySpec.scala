@@ -51,10 +51,11 @@ class PropertySpec extends SparkSpec {
   test("Scd2.replay folds snapshots; changelog replays to final state") {
     val opts = Scd2.Options(key = "K", attrCols = Seq("V"))
     val snaps = Seq(
-      "2020-01-01" -> Seq(("a", "1"), ("b", "1")).toDF("K", "V"),
-      "2020-01-02" -> Seq(("a", "2"), ("c", "1")).toDF("K", "V"),
-      "2020-01-03" -> Seq(("a", "2"), ("c", "2")).toDF("K", "V"))
-    val r = Scd2.replay(snaps, opts)
+      ("a", "1", "2020-01-01"), ("b", "1", "2020-01-01"),
+      ("a", "2", "2020-01-02"), ("c", "1", "2020-01-02"),
+      ("a", "2", "2020-01-03"), ("c", "2", "2020-01-03")).toDF("K", "V", "day")
+    val r = Scd2.history(snaps, "day",
+      Seq("2020-01-01", "2020-01-02", "2020-01-03"), opts)
     // final dim state
     val dim = r.dim.collect().map(x =>
       x.getAs[String]("K") -> (x.getAs[String]("V"), x.getAs[Boolean]("DEACTIVATE"))).toMap

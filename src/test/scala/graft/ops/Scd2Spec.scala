@@ -74,28 +74,23 @@ class Scd2Spec extends SparkSpec {
     assert(bugCompat.changelog.count() == 0) // NA != value → NA → dropped (R)
   }
 
-  test("replay checkpoints long histories: lineage depends on distance to the " +
-    "last checkpoint, not on history length") {
-    // alternating lane flips per day → every merge produces changelog
-    // rows, the worst case for accumulated-union lineage
-    def snaps(n: Int) = (1 to n).map { i =>
-      val day = java.time.LocalDate.of(2020, 1, 1).plusDays(i.toLong - 1).toString
-      day -> snap(("d1", if (i % 2 == 0) "L1" else "L2", "f"), ("d2", "L3", "f"))
+  test("history of 120 lane-flip snapshots: every flip logged, and the plan " +
+    "does not grow with the number of snapshots") {
+    // alternating lane flips per day → every snapshot after the first
+    // logs a change for d1, none for d2
+    def history(n: Int) = {
+      val days = (1 to n).map(i =>
+        java.time.LocalDate.of(2020, 1, 1).plusDays(i.toLong - 1).toString)
+      val frame = days.zipWithIndex.flatMap { case (day, i) =>
+        Seq(("d1", if ((i + 1) % 2 == 0) "L1" else "L2", "f", day), ("d2", "L3", "f", day))
+      }.toDF("DETECTOR_NAME", "LANE", "ABANDONED", "snap_date")
+      Scd2.history(frame, "snap_date", days, opts)
     }
-    def leaves(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.collectLeaves().size
-    // 120 snaps → 119 merges, last checkpoint after merge 100, 19 live;
-    // 95 snaps → 94 merges, last checkpoint after merge 75, 19 live.
-    // Same distance-to-checkpoint ⇒ identical plan size — the leaf
-    // count is a function of checkpointEvery, NOT of history length
-    // (un-checkpointed, 119 merges would stack a plan exponentially
-    // deeper than 94's; the reference's ~1,423 snapshots would never
-    // even finish analysis)
-    val r120 = Scd2.replay(snaps(120), opts, checkpointEvery = 25)
-    val r95 = Scd2.replay(snaps(95), opts, checkpointEvery = 25)
-    assert(leaves(r120.dim) == leaves(r95.dim))
-    assert(leaves(r120.changelog) == leaves(r95.changelog))
-    // and the answer is right: 119 lane flips for d1, none for d2
+    def planSize(df: DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case p => p }.size
+    val (r120, r95) = (history(120), history(95))
+    assert(planSize(r120.dim) == planSize(r95.dim))
+    assert(planSize(r120.changelog) == planSize(r95.changelog))
     assert(r120.changelog.where($"DETECTOR_NAME" === "d1").count() == 119)
     assert(r120.changelog.where($"DETECTOR_NAME" === "d2").count() == 0)
     assert(r120.dim.count() == 2)
