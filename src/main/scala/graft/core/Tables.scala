@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-table access for a scale-factor directory (TESTDATA.md layout:
   * `{dir}/{name}.parquet`). The same helper doubles as the warehouse
@@ -8,11 +9,88 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * "directory of parquet", which at cluster scale becomes a
   * date-partitioned directory tree; Catalyst prunes partitions from
   * pushed-down date predicates automatically.
+  *
+  * Every parquet read in the engine goes through [[parquet]], which
+  * resolves the table's schema from one footer on the driver instead of
+  * letting Spark infer it in a one-task job.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(splitCached(spark, s"$dir/$name.parquet"))
+    else parquet(spark, splitCached(spark, s"$dir/$name.parquet"))
+
+  /** `spark.read.parquet(path)` without the schema-inference job. Spark's
+    * non-merging inference lists the table, reads the footer of its
+    * first data file by path (or of a `_common_metadata`/`_metadata`
+    * summary, which no writer here produces) and converts it — inside a
+    * one-task Spark job. This reads the same footer on the driver, converts it the same
+    * way with the session's parquet confs as they are at call time (so
+    * the `nanosAsLong` that [[events]] sets applies), and hands the
+    * result to `spark.read.schema`. Partition columns are still
+    * discovered from the path, so the frame's schema is the one the
+    * inferred read gives. Every table the engine reads was written with
+    * one schema, so one footer stands for all of its files.
+    *
+    * Falls back to the inferred read when schema merging is on (the
+    * `mergeSchema` option or `spark.sql.parquet.mergeSchema`) and when no
+    * footer can be read (no such path, no data file, a glob), so those
+    * cases keep Spark's own behaviour and errors. Nothing is cached: a
+    * local footer read takes about a millisecond, and a cache would
+    * have to be invalidated by every overwrite.
+    */
+  def parquet(spark: SparkSession, path: String,
+              options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = spark.read.options(options)
+    footerSchema(spark, path, options)
+      .fold(reader.parquet(path))(reader.schema(_).parquet(path))
+  }
+
+  private def footerSchema(spark: SparkSession, path: String,
+                           options: Map[String, String]): Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val sql = spark.sessionState.conf
+    val merge = options.collectFirst {
+      case (k, v) if k.equalsIgnoreCase("mergeSchema") => v.toBoolean
+    }.getOrElse(sql.isParquetSchemaMergingEnabled)
+    if (merge) return None
+    val conf = spark.sessionState.newHadoopConfWithOptions(options)
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(conf)
+      firstDataFile(fs, fs.getFileStatus(p)).map { st =>
+        // the converter Spark's inference builds
+        // (ParquetFileFormat.mergeSchemasInParallel), from the same confs
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = sql.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+          nanosAsLong = sql.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+        val footer = ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(st.getPath, footer), converter)
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** The first data file by path under `root`, skipping the names
+    * Spark's listing skips (`_SUCCESS` and other `_` or `.` names, except
+    * `name=value` partition dirs). */
+  private def firstDataFile(fs: org.apache.hadoop.fs.FileSystem,
+                            root: org.apache.hadoop.fs.FileStatus)
+      : Option[org.apache.hadoop.fs.FileStatus] = {
+    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
+    def leaves(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) leaves(st.getPath) else Seq(st)
+      }
+    (if (root.isDirectory) leaves(root.getPath) else Seq(root))
+      .minByOption(_.getPath.toString)
+  }
 
   /** Single-file fixture tables serialize every scan: one parquet file
     * with one row group is ONE Spark input split, so a scan-heavy ×1
@@ -37,7 +115,7 @@ object Tables {
     * rewrite job and then discard it.
     */
   private val splitLock = new Object
-  private def splitCached(spark: SparkSession, path: String): String = {
+  private[core] def splitCached(spark: SparkSession, path: String): String = {
     val src = new java.io.File(path)
     if (!src.isFile || src.length < 64L * 1024 || src.length > 256L * 1024 * 1024)
       return path
@@ -77,7 +155,7 @@ object Tables {
             val tmp = slot.getParent.resolve(
               s"$key.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
             java.nio.file.Files.createDirectories(slot.getParent)
-            spark.read.parquet(path).repartition(8)
+            parquet(spark, path).repartition(8)
               .write.mode("overwrite").parquet(tmp.toString)
             try java.nio.file.Files.move(tmp, slot,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -108,7 +186,7 @@ object Tables {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(splitCached(spark, s"$dir/events.parquet"))
+    val raw = parquet(spark, splitCached(spark, s"$dir/events.parquet"))
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampType => raw
@@ -130,7 +208,7 @@ object Tables {
   def media(spark: SparkSession, dir: String, name: String)
            (synth: => DataFrame): DataFrame =
     if (fsExists(spark, s"$dir/$name.parquet/_SUCCESS"))
-      spark.read.parquet(s"$dir/$name.parquet")
+      parquet(spark, s"$dir/$name.parquet")
     else synth
 
   /** Filesystem probe through the Hadoop FS API, so the check resolves
@@ -147,7 +225,7 @@ object Tables {
 
   /** Warehouse-style read (directory, possibly hive-partitioned). */
   def loadDir(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name")
+    parquet(spark, s"$dir/$name")
 
   def exists(dir: String, name: String): Boolean =
     new java.io.File(s"$dir/$name.parquet").exists() ||

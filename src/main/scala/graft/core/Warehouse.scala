@@ -58,9 +58,16 @@ final class Warehouse(spark: SparkSession, root: String) {
     }
   }
 
+  /** The table as a DataFrame, after recovering a table stranded by an
+    * interrupted [[replace]]. The schema comes from one parquet footer
+    * read on the driver ([[Tables.parquet]]), so a read starts no Spark
+    * job: it costs a listing and a footer read. Partition columns (e.g.
+    * `START_DATE` of a date-partitioned table) come from the directory
+    * names, as with `spark.read.parquet`.
+    */
   def read(table: String): DataFrame = {
     recoverStranded(table)
-    spark.read.parquet(path(table))
+    Tables.parquet(spark, path(table))
   }
 
   /** S8 — plain append. */
@@ -424,7 +431,7 @@ final class Warehouse(spark: SparkSession, root: String) {
 
   /** Time-travel read of a specific published version. */
   def readVersion(table: String, v: Int): DataFrame =
-    spark.read.parquet(versionDir(table, v).toString)
+    Tables.parquet(spark, versionDir(table, v).toString)
 
   /** Read whatever the pointer currently targets. */
   def readCurrent(table: String): DataFrame =

@@ -75,16 +75,22 @@ object Gam {
     out
   }
 
-  /** Fit one group and score the grid. Pure function — unit-testable
-    * without Spark.
+  /** The order a group's rows enter the design in. */
+  private val rowOrder: Ordering[TrainRow] = Ordering.by[TrainRow, (Long, String, Double)](
+    r => (r.epochSec, r.carry, r.y))(
+    Ordering.Tuple3(Ordering.Long, Ordering.String, Ordering.Double.TotalOrdering))
+
+  private def splines(cfg: Config): (Spline, Spline) =
+    (Spline.uniform(1, 366, cfg.kYday), Spline.uniform(0, 86400, cfg.kItime))
+
+  /** Fit one group's rows. They are sorted by (epochSec, carry, y)
+    * first: `Glm`'s X'WX and X'Wz are floating-point sums in row order,
+    * so without the sort β could move in its last bits with the order
+    * the shuffle delivered the rows in.
     */
-  private[model] def fitScoreGroup(rows: Seq[TrainRow], grid: Seq[Long],
-                                   cfg: Config): Iterator[Prediction] = {
-    if (rows.size < cfg.minRows) return Iterator.empty // QAQC floor
-    val group = rows.head.group
-    val carry = rows.head.carry
-    val ydaySp = Spline.uniform(1, 366, cfg.kYday)
-    val itimeSp = Spline.uniform(0, 86400, cfg.kItime)
+  private[model] def fitGroup(unordered: Seq[TrainRow], cfg: Config): Glm.Fit = {
+    val rows = unordered.sorted(rowOrder)
+    val (ydaySp, itimeSp) = splines(cfg)
     val x = rows.map(r => designRow(feats(r.epochSec), cfg, ydaySp, itimeSp)).toArray
     val y = rows.map(_.y).toArray
     // penalty blocks mirror the design layout: yday smooth, then the 7
@@ -93,12 +99,24 @@ object Gam {
     val nI = if (cfg.hourly) itimeSp.size - 1 else 0
     val blocks = Seq((1 + 6, nY)) ++
       (if (cfg.hourly) (0 until 7).map(w => (1 + 6 + nY + w * nI, nI)) else Nil)
-    val fit =
-      if (cfg.lambdaGrid.nonEmpty)
-        Glm.fitGcv(x, y, cfg.negBin, blocks, cfg.lambdaGrid).fit
-      else
-        Glm.fit(x, y, cfg.negBin,
-          penalty = Glm.diffPenalty(x(0).length, blocks, cfg.lambda))
+    if (cfg.lambdaGrid.nonEmpty)
+      Glm.fitGcv(x, y, cfg.negBin, blocks, cfg.lambdaGrid).fit
+    else
+      Glm.fit(x, y, cfg.negBin,
+        penalty = Glm.diffPenalty(x(0).length, blocks, cfg.lambda))
+  }
+
+  /** Fit one group and score the grid. Pure function — unit-testable
+    * without Spark.
+    */
+  private[model] def fitScoreGroup(rows: Seq[TrainRow], grid: Seq[Long],
+                                   cfg: Config): Iterator[Prediction] = {
+    if (rows.size < cfg.minRows) return Iterator.empty // QAQC floor
+    // the earliest row's carry, not whichever row the shuffle put first
+    val first = rows.min(rowOrder)
+    val (group, carry) = (first.group, first.carry)
+    val fit = fitGroup(rows, cfg)
+    val (ydaySp, itimeSp) = splines(cfg)
     grid.iterator.map { t =>
       val yhat = Glm.predict(designRow(feats(t), cfg, ydaySp, itimeSp), fit.beta)
       Prediction(group, carry, t, math.round(yhat))

@@ -262,33 +262,47 @@ object Glm {
     Fit(beta, alpha, converged)
   }
 
+  private val lanczosCof = Array(76.18009172947146, -86.50532032941677,
+    24.01409824083091, -1.231739572450155, 0.1208650973866179e-2,
+    -0.5395239384953e-5)
+
   /** Lanczos log-gamma (g=5, 6-term — the classic public-domain
     * coefficients; |err| < 2e-10 for x > 0). Needed for the NB2
     * likelihood; no external math dependency.
     */
   private[model] def lgamma(xx: Double): Double = {
-    val cof = Array(76.18009172947146, -86.50532032941677, 24.01409824083091,
-      -1.231739572450155, 0.1208650973866179e-2, -0.5395239384953e-5)
     val x = xx
     var y = xx
     val tmp0 = x + 5.5
     val tmp = tmp0 - (x + 0.5) * math.log(tmp0)
     var ser = 1.000000000190015
     var j = 0
-    while (j < 6) { y += 1; ser += cof(j) / y; j += 1 }
+    while (j < 6) { y += 1; ser += lanczosCof(j) / y; j += 1 }
     -tmp + math.log(2.5066282746310005 * ser / x)
   }
 
   /** NB2 log-likelihood at fixed means (r = 1/α):
     * Σ lgamma(y+r) − lgamma(r) − lgamma(y+1) + r·log(r/(r+μ)) + y·log(μ/(r+μ)).
     */
-  def nbLogLik(y: Array[Double], mu: Array[Double], alpha: Double): Double = {
+  def nbLogLik(y: Array[Double], mu: Array[Double], alpha: Double): Double =
+    nbLogLik(y, lgammaY1(y), mu, alpha)
+
+  /** lgamma(y+1) per row: constant in α, so [[mlAlpha]] computes it once
+    * for all its likelihood evaluations. */
+  private def lgammaY1(y: Array[Double]): Array[Double] = y.map(v => lgamma(v + 1.0))
+
+  /** [[nbLogLik]] with lgamma(y+1) given and lgamma(r) computed once;
+    * the terms are added in the same order, so the sum is bit-identical
+    * to evaluating both inside the loop. */
+  private def nbLogLik(y: Array[Double], lgY1: Array[Double], mu: Array[Double],
+                       alpha: Double): Double = {
     val r = 1.0 / alpha
+    val lgR = lgamma(r)
     var ll = 0.0
     var i = 0
     while (i < y.length) {
       val mi = math.max(mu(i), 1e-12)
-      ll += lgamma(y(i) + r) - lgamma(r) - lgamma(y(i) + 1.0) +
+      ll += lgamma(y(i) + r) - lgR - lgY1(i) +
         r * math.log(r / (r + mi)) + y(i) * math.log(mi / (r + mi))
       i += 1
     }
@@ -303,13 +317,15 @@ object Glm {
   def mlAlpha(y: Array[Double], mu: Array[Double],
               lo: Double = 1e-8, hi: Double = 100.0): Double = {
     val phi = (math.sqrt(5.0) - 1) / 2
+    val lgY1 = lgammaY1(y)
+    def ll(logAlpha: Double) = nbLogLik(y, lgY1, mu, math.exp(logAlpha))
     var a = math.log(lo); var b = math.log(hi)
     var c = b - phi * (b - a); var d = a + phi * (b - a)
-    var fc = nbLogLik(y, mu, math.exp(c)); var fd = nbLogLik(y, mu, math.exp(d))
+    var fc = ll(c); var fd = ll(d)
     var it = 0
     while (b - a > 1e-4 && it < 80) {
-      if (fc > fd) { b = d; d = c; fd = fc; c = b - phi * (b - a); fc = nbLogLik(y, mu, math.exp(c)) }
-      else { a = c; c = d; fc = fd; d = a + phi * (b - a); fd = nbLogLik(y, mu, math.exp(d)) }
+      if (fc > fd) { b = d; d = c; fd = fc; c = b - phi * (b - a); fc = ll(c) }
+      else { a = c; c = d; fc = fd; d = a + phi * (b - a); fd = ll(d) }
       it += 1
     }
     val best = math.exp((a + b) / 2)

@@ -530,7 +530,7 @@ object PipelineQueries {
           // is layout-blind (pack_md5 sorts its segment list).
           .hint("rebalance", col("shard"))
           .write.mode("overwrite").partitionBy("shard").parquet(out)
-        s.read.parquet(out)
+        graft.core.Tables.parquet(s, out)
           .groupBy(col("pack_id"), col("shard"))
           .agg(count(lit(1)).as("n_segs"),
             sum(col("n_pack_tokens")).as("n_pack_tokens"),

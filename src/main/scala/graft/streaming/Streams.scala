@@ -152,7 +152,7 @@ object Streams {
           // before it — the replay-stability anchor (see scaladoc)
           val store =
             if (fs.exists(storePath))
-              spark.read.parquet(storeDir)
+              graft.core.Tables.parquet(spark, storeDir)
                 .where(col(arrivalCol) < lit(label))
                 .select(col(idCol), col(textCol))
             else arrival.limit(0)
@@ -380,7 +380,7 @@ object Streams {
         val storeFs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
         val merged =
           if (storeFs.exists(storePath)) {
-            val store = spark.read.parquet(storeDir)
+            val store = graft.core.Tables.parquet(spark, storeDir)
             // schema-aligned merge (decimal sums read back as decimal)
             Aggs.mergeAggState(store, batchState, keys)
           } else batchState
@@ -434,7 +434,7 @@ object Streams {
               .withColumn(opts.deactivateCol, lit(false))
               .write.mode("overwrite").parquet(dimDir)
           } else {
-            val r = Scd2.merge(spark.read.parquet(dimDir), snap, day, opts)
+            val r = Scd2.merge(graft.core.Tables.parquet(spark, dimDir), snap, day, opts)
             // materialize BOTH legs before overwriting the dim input path
             val dim = r.dim.localCheckpoint(true)
             val log = r.changelog.localCheckpoint(true)

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 
 /** Test-scoped measurement harness (NOT graded surface — lives under
   * src/test): time registry queries in isolation with the same engine
@@ -9,7 +10,11 @@ import org.apache.spark.sql.SparkSession
   * time-vs-sf scaling probes.
   *
   * Usage (sbt): Test/runMain graft.tools.TimeQuery <sfDir> [-explain]
-  *              [-reps N] q104_pagerank q145_ivfpq_ann ...
+  *              [-reps N] [-rules N] q104_pagerank q145_ivfpq_ann ...
+  *
+  * `-rules N` prints, per query, the N Catalyst rules (analyzer and
+  * optimizer) that took the most time over its timed reps, from
+  * `RuleExecutor`'s global metering.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -17,6 +22,8 @@ object TimeQuery {
     val explain = args.contains("-explain")
     val reps = args.sliding(2).collectFirst {
       case Array("-reps", n) => n.toInt }.getOrElse(2)
+    val topRules = args.sliding(2).collectFirst {
+      case Array("-rules", n) => n.toInt }.getOrElse(0)
     val names = args.drop(1).filterNot(_.startsWith("-"))
       .filterNot(a => a.forall(_.isDigit))
     val builder = SparkSession.builder()
@@ -59,6 +66,7 @@ object TimeQuery {
           org.apache.spark.sql.execution.FormattedMode))
         reset()
       }
+      RuleExecutor.resetMetrics()
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         // same per-query action as Bench: noop-sink materialization of
@@ -70,7 +78,22 @@ object TimeQuery {
       }
       println(f"TIME $name sf=$sfDir cold=${times.head}%.3f " +
         f"min=${times.min}%.3f all=${times.map(t => f"$t%.3f").mkString(",")}")
+      if (topRules > 0) printRules(name, reps, topRules)
     }
     spark.stop()
+  }
+
+  /** The `n` rules with the most total time in `RuleExecutor`'s dump
+    * (one line per rule, `name effective / total effRuns / runs`, times
+    * in ns, sorted by total time, descending). */
+  private def printRules(name: String, reps: Int, n: Int): Unit = {
+    val lines = RuleExecutor.dumpTimeSpent().linesIterator
+      .dropWhile(!_.startsWith("Rule ")).drop(1)
+      .map(_.trim.split("\\s+")).filter(_.length == 7).take(n).toSeq
+    val total = RuleExecutor.getCurrentMetrics().time / 1e9
+    println(f"RULES $name over $reps reps: total=$total%.3f s")
+    lines.foreach { case Array(rule, _, _, ns, _, _, runs) =>
+      println(f"  ${ns.toLong / 1e9}%8.3f s  $runs%6s runs  $rule")
+    }
   }
 }

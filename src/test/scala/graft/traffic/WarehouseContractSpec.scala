@@ -1,7 +1,7 @@
 package graft.traffic
 
 import graft.SparkSpec
-import graft.core.Warehouse
+import graft.core.{ReadParity, Warehouse}
 import graft.sources.ConfigXml
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -105,5 +105,24 @@ class WarehouseContractSpec extends SparkSpec {
       // small) — the conform chokepoint must not silently truncate
       assert(wh.read(t).where(col("VOLUMN_PREDICTION").isNull).count() == 0)
     }
+
+    // ---- VOLUME_DIFF through the compare's writer, then every table
+    //      above read back through Tables.parquet: the inferred read's
+    //      schema and rows, and no Spark job ----
+    val nodeHour = Rollup.nodeAggregate(actual, "hour")
+    val predicted = Schemas.conform(nodeHour.select(col("NODE_NAME"),
+      col("START_DATETIME").as("PREDICT_TIME"),
+      col("VOLUME_SUM_IMPUTE").as("VOLUMN_PREDICTION"), col("CORRIDOR_ROUTE")),
+      Schemas.predict)
+    wh.overwrite(Compare.volumeDiff(nodeHour, predicted), "VOLUME_DIFF")
+    assert(!wh.read("VOLUME_DIFF").isEmpty)
+    Seq("RTMC_15MIN", ConfigNightly.dimTable, ConfigNightly.logTable,
+        "RTMC_PREDICT_HOUR", "RTMC_PREDICT_DAY", "VOLUME_DIFF").foreach { t =>
+      val df = ReadParity.check(spark, s"$root/$t", sameRows = true)
+      val (read, jobs) = ReadParity.jobsDuring(spark) { val r = wh.read(t); r.schema; r }
+      assert(jobs == 0 && read.schema == df.schema, t)
+    }
+    // START_DATE still comes from the partition directories
+    assert(fact.schema.last.name == "START_DATE")
   }
 }
