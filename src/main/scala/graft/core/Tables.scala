@@ -31,30 +31,22 @@ object Tables {
     * inferred read gives. Every table the engine reads was written with
     * one schema, so one footer stands for all of its files.
     *
-    * Falls back to the inferred read when schema merging is on (the
-    * `mergeSchema` option or `spark.sql.parquet.mergeSchema`) and when no
-    * footer can be read (no such path, no data file, a glob), so those
-    * cases keep Spark's own behaviour and errors. Nothing is cached: a
-    * local footer read takes about a millisecond, and a cache would
-    * have to be invalidated by every overwrite.
+    * Falls back to the inferred read when `spark.sql.parquet.mergeSchema`
+    * is on and when no footer can be read (no such path, no data file, a
+    * glob), so those cases keep Spark's own behaviour and errors. Nothing
+    * is cached: a local footer read takes about a millisecond, and a
+    * cache would have to be invalidated by every overwrite.
     */
-  def parquet(spark: SparkSession, path: String,
-              options: Map[String, String] = Map.empty): DataFrame = {
-    val reader = spark.read.options(options)
-    footerSchema(spark, path, options)
-      .fold(reader.parquet(path))(reader.schema(_).parquet(path))
-  }
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
-  private def footerSchema(spark: SparkSession, path: String,
-                           options: Map[String, String]): Option[StructType] = {
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
     val sql = spark.sessionState.conf
-    val merge = options.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("mergeSchema") => v.toBoolean
-    }.getOrElse(sql.isParquetSchemaMergingEnabled)
-    if (merge) return None
-    val conf = spark.sessionState.newHadoopConfWithOptions(options)
+    if (sql.isParquetSchemaMergingEnabled) return None
+    val conf = spark.sessionState.newHadoopConf()
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(conf)
@@ -78,18 +70,23 @@ object Tables {
 
   /** The first data file by path under `root`, skipping the names
     * Spark's listing skips (`_SUCCESS` and other `_` or `.` names, except
-    * `name=value` partition dirs). */
-  private def firstDataFile(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.FileStatus)
+    * `name=value` partition dirs). Walks the tree depth-first in path
+    * order and stops at the first file, so it lists about as many
+    * directories as the tree is deep, not every partition: a directory
+    * sorts by its name plus `/`, as its files' paths do against a
+    * sibling file's. */
+  private[core] def firstDataFile(fs: org.apache.hadoop.fs.FileSystem,
+                                  root: org.apache.hadoop.fs.FileStatus)
       : Option[org.apache.hadoop.fs.FileStatus] = {
     def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) ||
       name.startsWith(".") || name.endsWith("._COPYING_")
-    def leaves(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(dir).toSeq.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
-        if (st.isDirectory) leaves(st.getPath) else Seq(st)
-      }
-    (if (root.isDirectory) leaves(root.getPath) else Seq(root))
-      .minByOption(_.getPath.toString)
+    def sortKey(st: org.apache.hadoop.fs.FileStatus) =
+      if (st.isDirectory) st.getPath.getName + "/" else st.getPath.getName
+    def first(st: org.apache.hadoop.fs.FileStatus): Option[org.apache.hadoop.fs.FileStatus] =
+      if (!st.isDirectory) Some(st)
+      else fs.listStatus(st.getPath).filterNot(c => hidden(c.getPath.getName))
+        .sortBy(sortKey).iterator.flatMap(first).nextOption()
+    first(root)
   }
 
   /** Single-file fixture tables serialize every scan: one parquet file

@@ -81,17 +81,48 @@ class TablesParquetSpec extends SparkSpec {
     val dir = Files.createTempDirectory("tables_parquet_merge").toString
     Seq((1, "x")).toDF("a", "b").write.parquet(s"$dir/k=1")
     Seq((2, 2.5)).toDF("a", "c").write.parquet(s"$dir/k=2")
-    val merged = Tables.parquet(spark, dir, Map("mergeSchema" -> "true"))
-    assert(merged.schema == spark.read.option("mergeSchema", "true").parquet(dir).schema)
-    assert(merged.columns.toSeq == Seq("a", "b", "c", "k"))
-    assert(rows(merged) == Seq(Seq(1, "x", null, 1), Seq(2, null, 2.5, 2)))
     val key = "spark.sql.parquet.mergeSchema"
     spark.conf.set(key, "true")
-    try assert(Tables.parquet(spark, dir).columns.toSeq == Seq("a", "b", "c", "k"))
-    finally spark.conf.unset(key)
+    try {
+      val merged = Tables.parquet(spark, dir)
+      assert(merged.schema == spark.read.parquet(dir).schema)
+      assert(merged.columns.toSeq == Seq("a", "b", "c", "k"))
+      assert(rows(merged) == Seq(Seq(1, "x", null, 1), Seq(2, null, 2.5, 2)))
+    } finally spark.conf.unset(key)
     // not merging, both read the first file's footer
     assertParity(spark, dir, sameRows = true)
     assert(Tables.parquet(spark, dir).columns.toSeq == Seq("a", "b", "k"))
+  }
+
+  test("the footer comes from the first data file by path, found without listing every partition") {
+    import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+    val root = Files.createTempDirectory("first_data_file")
+    def touch(rel: String) = {
+      val f = root.resolve(rel); Files.createDirectories(f.getParent); Files.createFile(f)
+    }
+    // an empty and a _SUCCESS-only partition come first; a dir sorts as
+    // its name plus "/", so the file "b-c" comes before the dir "b"
+    Files.createDirectories(root.resolve("a=0"))
+    touch("a=1/_SUCCESS"); touch("a=1/.part.crc")
+    Seq("a=2/b/z", "a=2/b-c", "a=2/_b", "a=3/x", "a=4/y").foreach(touch)
+    val listed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val fs = new RawLocalFileSystem {
+      override def listStatus(p: Path): Array[FileStatus] = {
+        listed += p.getName; super.listStatus(p)
+      }
+    }
+    fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    val top = fs.getFileStatus(new Path(root.toUri))
+    val first = Tables.firstDataFile(fs, top).map(_.getPath.toString)
+    assert(first.exists(_.endsWith("/a=2/b-c")), first)
+    assert(listed.toSeq == Seq(root.getFileName.toString, "a=0", "a=1", "a=2"))
+    // the same file as the lowest path over a full listing, which is what
+    // Spark's inference reads
+    val all = Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(f => Files.isRegularFile(f) &&
+        !root.relativize(f).toString.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+      .map(f => new Path(f.toUri).toString)
+    assert(first.contains(all.min))
   }
 
   test("no parquet read in src/main/scala bypasses Tables.parquet") {
@@ -105,9 +136,16 @@ class TablesParquetSpec extends SparkSpec {
     val files = Files.walk(java.nio.file.Paths.get("src/main/scala")).toArray
       .map(_.asInstanceOf[java.nio.file.Path]).filter(_.toString.endsWith(".scala"))
     assert(files.length > 50)
+    // the helper itself, up to its first private member, is the one place allowed
+    val helper = "(?s)def parquet\\(spark: SparkSession, path: String\\).*?private def ".r
     val hits = files.toSeq.flatMap { f =>
       val code = comments.replaceAllIn(new String(Files.readAllBytes(f), "UTF-8"), "")
-      direct.findAllIn(code).map(m => s"$f: $m")
+      val checked =
+        if (f.endsWith("core/Tables.scala")) {
+          assert(helper.findFirstIn(code).exists(direct.findFirstIn(_).isDefined))
+          helper.replaceFirstIn(code, "")
+        } else code
+      direct.findAllIn(checked).map(m => s"$f: $m")
     }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
